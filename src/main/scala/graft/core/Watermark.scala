@@ -1,6 +1,6 @@
 package graft.core
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.Paths
 import java.time.format.DateTimeFormatter
 import java.time.{Instant, LocalDateTime, ZoneOffset}
 
@@ -9,7 +9,7 @@ import java.time.{Instant, LocalDateTime, ZoneOffset}
   *
   * Codec mirrors the reference's `'yyyyMMdd HH:mm'` lastruntime.log
   * (reference pyCassElastic.py:140-170) with two deliberate fixes:
-  *   - the write is atomic (temp file + rename), and
+  *   - the write is an atomic [[Pointer]] publish, and
   *   - callers commit it only after a successful run, fixing the
   *     reference's write-even-on-error gap (pyCassElastic.py:138).
   *
@@ -38,18 +38,10 @@ object Watermark {
   def decode(s: String): Long =
     LocalDateTime.parse(s.trim, fmt).toInstant(ZoneOffset.UTC).toEpochMilli
 
-  def read(path: String): Option[Long] = {
-    val p = Paths.get(path)
-    if (Files.exists(p)) Some(decode(Files.readString(p))) else None
-  }
+  def read(path: String): Option[Long] = Pointer.read(Paths.get(path)).map(decode)
 
-  def write(path: String, epochMillis: Long): Unit = {
-    val p = Paths.get(path).toAbsolutePath
-    if (p.getParent != null) Files.createDirectories(p.getParent)
-    val tmp = p.resolveSibling(p.getFileName.toString + ".tmp")
-    Files.writeString(tmp, encode(epochMillis))
-    Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
+  def write(path: String, epochMillis: Long): Unit =
+    Pointer.publish(Paths.get(path), encode(epochMillis))
 
   /** New window ending now (minute-truncated), starting at the persisted
     * watermark. Reference computes the same pair at pyCassElastic.py:156-163.

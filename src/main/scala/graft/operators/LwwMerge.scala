@@ -17,10 +17,12 @@ import org.apache.spark.sql.{Column, DataFrame}
   * Two physical forms, same semantics:
   *
   *  - `latestAgg` — `groupBy(id).agg(max_by(struct(*), orderKey))`.
-  *    Hash aggregate with MAP-SIDE PARTIAL aggregation: each input
-  *    partition reduces to one candidate row per key before the
-  *    shuffle, so bytes shuffled ≈ |distinct keys|, not |rows|. This is
-  *    the 100 TB-scale default.
+  *    Planned as a SortAggregate (max_by's struct buffer cannot be
+  *    hash-aggregated) with MAP-SIDE PARTIAL aggregation:
+  *    `partial_max_by` reduces each input partition to one candidate
+  *    row per key before the exchange, so bytes shuffled ≈ |distinct
+  *    keys| per partition, not |rows|. This is the 100 TB-scale
+  *    default.
   *  - `latestWindow` — `row_number` over (partitionBy id, orderBy
   *    version desc). Shuffles EVERY row then sorts per partition;
   *    kept because it also yields losers (rank > 1) for conflictSplit,

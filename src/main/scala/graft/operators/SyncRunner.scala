@@ -26,10 +26,13 @@ import graft.sources.TableIO
   *      watermark — and only on success, fixing the reference's
   *      write-even-on-error gap (:138).
   *
-  * Scale: each leg is one shuffle on the id columns (the LWW hash
-  * aggregate with map-side combine); the window filter is a pushed
-  * predicate; with a date-partitioned TableIO layout it becomes
-  * partition pruning. Nothing is collected to the driver.
+  * Scale: each leg is one shuffle on the id columns — the LWW
+  * `max_by` aggregate, planned as a SortAggregate whose
+  * `partial_max_by` runs before the exchange (max_by's struct buffer
+  * cannot be hash-aggregated, but the map-side combine still cuts the
+  * shuffle to one candidate per key and partition). The window filter
+  * is a pushed predicate; with a date-partitioned TableIO layout it
+  * becomes partition pruning. Nothing is collected to the driver.
   */
 object SyncRunner {
 
@@ -69,7 +72,7 @@ object SyncRunner {
       }
     }
 
-    // 2+3. legs: L→R and R→L, each one LWW hash-aggregate. Leg row
+    // 2+3. legs: L→R and R→L, each one LWW max_by aggregate. Leg row
     // counts ride the write pass as CollectMetrics observations
     // (A2 counters, reference pyCassElastic.py:262-314) — no extra
     // count() jobs re-executing the lineage.
@@ -89,7 +92,9 @@ object SyncRunner {
     val pL =
       try sides.left.prepare(newL)
       catch { case NonFatal(e) => pR.abort(); throw e }
-    pR.commit(); pL.commit()
+    try pR.commit()
+    catch { case NonFatal(e) => pL.abort(); throw e }
+    pL.commit()
 
     // the staging writes were the observed actions; metrics are ready
     val stats =
@@ -107,9 +112,9 @@ object SyncRunner {
   def specWmPath(wmPath: String, specName: String): String =
     wmPath + "." + specName.replaceAll("[^A-Za-z0-9._-]", "_")
 
-  /** All specs of a config, reference order; one spec failing must not
-    * abort its siblings (the reference's deliberately-broken third
-    * sync, tests/testConfig.json "this will fail!!").
+  /** All specs of a config; one spec failing must not abort its
+    * siblings (the reference's deliberately-broken third sync,
+    * tests/testConfig.json "this will fail!!").
     *
     * Each spec owns its own watermark (`specWmPath`), committed when
     * THAT spec succeeds. A single shared watermark gated on every spec
@@ -121,24 +126,66 @@ object SyncRunner {
     * computation sits inside the per-spec error path, so a corrupt
     * watermark file fails one spec's report instead of escaping to the
     * caller's loop.
+    *
+    * Specs that share no store and no watermark run concurrently (see
+    * [[components]]); one component runs inline on the caller's
+    * thread, the others on fresh threads, which inherit the caller's
+    * Spark local properties and active session. Specs inside a
+    * component run serially in config order. Reports come back in
+    * config order; a fatal error in any component is rethrown to the
+    * caller after every component has finished.
     */
   def runAll(
       spark: SparkSession,
       specs: Seq[(SyncSpec, Sides)],
       wmPath: String,
       nowMillis: Long): Seq[RunReport] = {
-    specs.map { case (spec, sides) =>
+    val reports = new Array[RunReport](specs.size)
+    def runSpec(i: Int): Unit = {
+      val (spec, sides) = specs(i)
       val wm = specWmPath(wmPath, spec.name)
-      try {
-        val span = Watermark.nextSpan(wm, nowMillis)
-          .orElse(Watermark.nextSpan(wmPath, nowMillis))
-        val report = runOnce(spark, spec, sides, span)
-        Watermark.write(wm,
-          span.map(_.thisMs).getOrElse(Watermark.truncToMinute(nowMillis)))
-        report
-      } catch { case NonFatal(e) =>
-        RunReport(spec.name, Nil, Some(e.toString))
-      }
+      reports(i) =
+        try {
+          val span = Watermark.nextSpan(wm, nowMillis)
+            .orElse(Watermark.nextSpan(wmPath, nowMillis))
+          val report = runOnce(spark, spec, sides, span)
+          Watermark.write(wm,
+            span.map(_.thisMs).getOrElse(Watermark.truncToMinute(nowMillis)))
+          report
+        } catch { case NonFatal(e) =>
+          RunReport(spec.name, Nil, Some(e.toString))
+        }
     }
+    val groups = components(specs.map(_._1), wmPath)
+    val fatal = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val threads = groups.drop(1).map { g =>
+      val t = new Thread(() =>
+        try g.foreach(runSpec)
+        catch { case e: Throwable => fatal.compareAndSet(null, e) },
+        s"graft-sync-${specs(g.head)._1.name}")
+      t.start()
+      t
+    }
+    try groups.headOption.foreach(_.foreach(runSpec))
+    finally threads.foreach(_.join())
+    Option(fatal.get).foreach(e => throw e)
+    reports.toSeq
   }
+
+  /** Spec indices grouped into components that must run serially: two
+    * specs land in one component when they share a table name (both
+    * would rewrite, or read while the other rewrites, the same store)
+    * or a watermark file (same sanitized spec name). Each component
+    * lists its specs in config order; components are ordered by their
+    * first spec.
+    */
+  private[operators] def components(specs: Seq[SyncSpec],
+      wmPath: String): Seq[Seq[Int]] =
+    specs.zipWithIndex.foldLeft(Vector.empty[(Set[String], Vector[Int])]) {
+      case (groups, (s, i)) =>
+        val keys = Set(s"table:${s.left.table}", s"table:${s.right.table}",
+          s"wm:${specWmPath(wmPath, s.name)}")
+        val (hit, rest) = groups.partition(_._1.exists(keys))
+        rest :+ (hit.flatMap(_._1).toSet ++ keys -> (hit.flatMap(_._2) :+ i).sorted)
+    }.map(_._2).sortBy(_.head)
 }

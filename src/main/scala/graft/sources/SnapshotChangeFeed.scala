@@ -1,9 +1,10 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Path, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.core.Pointer
 import graft.operators.SnapshotDiff
 
 /** Poll-and-diff change feed over a versioned snapshot store — the
@@ -12,8 +13,9 @@ import graft.operators.SnapshotDiff
   * this feed processed and hands the keyed change set
   * (`change_type` ∈ insert/update/delete + old_/new_ payloads) to the
   * handler. The feed's own cursor (last processed version) advances
-  * by atomic rename only AFTER the handler returns, so a crashed tick
-  * replays its diff — at-least-once, and the diff is deterministic
+  * by an atomic [[Pointer]] publish only AFTER the handler returns, so
+  * a crashed tick replays its diff — at-least-once, and the diff is
+  * deterministic
   * given the two pinned versions (the connector pins each read's
   * snapshot at plan definition).
   *
@@ -36,18 +38,9 @@ final class SnapshotChangeFeed(storePath: String, cursorDir: String,
   private def cursorPath: Path = Paths.get(cursorDir, "_feed_version")
 
   /** Last version this feed fully processed, if any. */
-  def cursor: Option[Long] =
-    if (Files.exists(cursorPath))
-      Some(Files.readString(cursorPath).trim.toLong)
-    else None
+  def cursor: Option[Long] = Pointer.read(cursorPath).map(_.toLong)
 
-  private def advance(v: Long): Unit = {
-    Files.createDirectories(cursorPath.getParent)
-    val tmp = cursorPath.resolveSibling(s"_feed_version.tmp")
-    Files.writeString(tmp, v.toString)
-    Files.move(tmp, cursorPath, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def advance(v: Long): Unit = Pointer.publish(cursorPath, v.toString)
 
   private def at(spark: SparkSession, v: Long): DataFrame =
     spark.read.format("graft-snapshot").option("version", v).load(storePath)

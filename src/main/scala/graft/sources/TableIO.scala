@@ -1,9 +1,13 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import java.util.Comparator
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+
+import graft.core.Pointer
 
 /** Storage abstraction fronting one "store" of a sync pair.
   *
@@ -32,19 +36,30 @@ object TableIO {
 /** Parquet snapshot store with versioned-snapshot + atomic-pointer
   * commits (the same commit shape lakehouse table formats use).
   *
-  * Layout: `path/v-<n>/…parquet` immutable snapshot dirs plus a tiny
-  * `path/_current` pointer file naming the live one. A write
+  * Layout: `path/v-<n>/…parquet` immutable snapshot dirs plus a
+  * `path/_current` pointer naming the live one. The pointer is a
+  * [[graft.core.Pointer]]: a symlink whose link text carries the
+  * snapshot name, next to a sibling file holding the same name, so
+  * `Files.readString(path/_current)` still returns it. A write
   * materializes `v-<n+1>` while readers keep resolving the pointer to
   * `v-<n>` (which also lets the new snapshot be computed FROM the old
   * one — Spark's own Overwrite truncates before reading); `commit`
-  * is ONE atomic pointer replace. Readers never observe a
+  * is ONE atomic pointer swap. Readers never observe a
   * half-published state — unlike a directory rename swap, a reader
   * that resolved the pointer keeps a complete immutable dir (the
-  * previous version is retained one commit as a grace window). This
-  * is also the object-store-friendly shape: no directory moves of
-  * data, just a small-object put. The abort path is the engine's
-  * version of the reference's duplication guard — fail the leg rather
-  * than leave a half-applied state (pyCassElastic.py:85-88).
+  * previous version is retained one commit as a grace window). No
+  * data directory ever moves. On an object store, which has no
+  * symlinks, the pointer would be a small-object put (a conditional
+  * put where concurrent writers exist); the engine only needs "read
+  * the live name, publish a new one atomically". The abort path is
+  * the engine's version of the reference's duplication guard — fail
+  * the leg rather than leave a half-applied state
+  * (pyCassElastic.py:85-88).
+  *
+  * Concurrent writers in one JVM are safe: commits to one store are
+  * serialized, and a dir staged but not yet committed or aborted is
+  * never swept by another writer's cleanup. Across JVMs the pointer
+  * swap stays last-writer-wins and cleanup is best effort.
   *
   * `partitionBy`: a date-derived column here turns the incremental
   * window scan into partition pruning — the reference's own
@@ -72,16 +87,17 @@ final class ParquetTableIO(val path: String, partitionBy: Seq[String] = Nil,
     * ADOPTED as the version-0 snapshot (bootstrap from an existing
     * plain table; the first commit supersedes it).
     */
-  def currentDir: Option[String] =
-    if (Files.exists(pointer))
-      Some(root.resolve(Files.readString(pointer).trim).toString)
-    else if (Files.exists(root) && {
+  def currentDir: Option[String] = Pointer.read(pointer) match {
+    case Some(v) if v.startsWith("v-") => Some(root.resolve(v).toString)
+    case Some(v) => throw new IllegalStateException(
+      s"store $path has a malformed _current pointer '$v' (expected a v-<n> snapshot name)")
+    case None if Files.exists(root) && {
         val s = Files.list(root)
         try s.anyMatch(f => f.getFileName.toString.endsWith(".parquet"))
         finally s.close()
-      })
-      Some(path)
-    else None
+      } => Some(path)
+    case None => None
+  }
 
   // snapshot dirs are "v-<n>" or "v-<n>-<uid>" (the uid disambiguates
   // concurrent writers); the numeric prefix is the version
@@ -160,47 +176,57 @@ final class ParquetTableIO(val path: String, partitionBy: Seq[String] = Nil,
     // out through the normal version cleanup
     val vName = f"v-${prev + 1}%09d-" +
       java.util.UUID.randomUUID().toString.take(8)
-    Staged(vName, root.resolve(vName), prev)
+    val s = Staged(vName, root.resolve(vName), prev)
+    ParquetTableIO.inFlight.add(ParquetTableIO.key(s.vDir))
+    s
   }
 
-  private[graft] def commitStaged(s: Staged): Unit = {
-    val tmp = root.resolve(s"_current.tmp-${s.vName}")
-    Files.writeString(tmp, s.vName)
-    Files.move(tmp, pointer,
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    // retire everything older than the immediately previous
-    // version — kept one commit as a grace window for readers
-    // that resolved the pointer just before the swap. Adopted
-    // plain-layout files (version 0) age out on the same schedule.
-    // A digit-less "v-" name is NOT ours (every writer here stamps a
-    // numeric version): versionOfDir parses it as 0 for ordering, but
-    // deleting a foreign directory on that reading would be silent
-    // data loss — skip it and leave a log line instead.
-    if (Files.exists(root)) {
-      val ls = Files.list(root)
-      try ls.forEach { f =>
-        val n = f.getFileName.toString
-        if (n.startsWith("v-") && !ParquetTableIO.hasVersionDigits(n))
-          System.err.println(s"graft table cleanup: skipping foreign " +
-            s"version-less entry $f (not a v-<n> snapshot)")
-        else if (n.startsWith("v-") && versionOf(n) < s.prev &&
-            !keepVersionDir(n)) {
-          deleteTree(f)
-          ParquetTableIO.evictPlans(f.toString)
-        }
-        else if (s.prev >= 1 && !Files.isDirectory(f) && n != "_current")
-          Files.deleteIfExists(f)
-      } finally ls.close()
+  private[graft] def commitStaged(s: Staged): Unit =
+    ParquetTableIO.commitLock(root).synchronized {
+      ParquetTableIO.inFlight.remove(ParquetTableIO.key(s.vDir))
+      val replaced = Pointer.read(pointer)
+      Pointer.publish(pointer, s.vName)
+      // retire everything older than the immediately previous
+      // version — kept one commit as a grace window for readers
+      // that resolved the pointer just before the swap — except the
+      // dir this commit replaced and dirs other writers of this JVM
+      // are still filling. Adopted plain-layout data files (version
+      // 0) age out on the same schedule.
+      // A digit-less "v-" name is NOT ours (every writer here stamps a
+      // numeric version): versionOfDir parses it as 0 for ordering, but
+      // deleting a foreign directory on that reading would be silent
+      // data loss — skip it and leave a log line instead.
+      if (Files.exists(root)) {
+        val ls = Files.list(root)
+        try ls.forEach { f =>
+          val n = f.getFileName.toString
+          if (n.startsWith("v-") && !ParquetTableIO.hasVersionDigits(n))
+            System.err.println(s"graft table cleanup: skipping foreign " +
+              s"version-less entry $f (not a v-<n> snapshot)")
+          else if (n.startsWith("v-") && versionOf(n) < s.prev &&
+              !replaced.contains(n) && !keepVersionDir(n) &&
+              !ParquetTableIO.inFlight.contains(ParquetTableIO.key(f))) {
+            deleteTree(f)
+            ParquetTableIO.evictPlans(f.toString)
+          }
+          else if (s.prev >= 1 && ParquetTableIO.isPlainDataFile(n) &&
+              Files.isRegularFile(f))
+            Files.deleteIfExists(f)
+        } finally ls.close()
+      }
     }
-  }
 
-  private[graft] def abortStaged(s: Staged): Unit = deleteTree(s.vDir)
+  private[graft] def abortStaged(s: Staged): Unit = {
+    ParquetTableIO.inFlight.remove(ParquetTableIO.key(s.vDir))
+    deleteTree(s.vDir)
+  }
 
   override def prepare(df: DataFrame): TableIO.Prepared = {
     val staged = stage()
     val w = derive(df).write.mode(SaveMode.Overwrite)
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
+    try (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
       .parquet(staged.vDir.toString)
+    catch { case NonFatal(e) => abortStaged(staged); throw e }
     new TableIO.Prepared {
       override def commit(): Unit = commitStaged(staged)
       override def abort(): Unit = abortStaged(staged)
@@ -260,6 +286,30 @@ object ParquetTableIO {
     */
   private[sources] val planCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), org.apache.spark.sql.DataFrame]()
+
+  /** Staged snapshot dirs of this JVM not yet committed or aborted:
+    * another writer's commit cleanup must not sweep them. A Prepared
+    * that is dropped without either keeps its dir until process exit.
+    */
+  private val inFlight = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  private def key(p: Path): String = p.toAbsolutePath.normalize.toString
+
+  private val commitLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
+
+  /** One lock per store: a commit's swap and its cleanup see a stable
+    * pointer.
+    */
+  private def commitLock(root: Path): Object =
+    commitLocks.computeIfAbsent(key(root), _ => new Object)
+
+  /** Data files of an adopted plain parquet layout (Spark's parquet
+    * output: part files, commit marker, their checksums). The commit
+    * sweep deletes only these, never pointers or foreign files.
+    */
+  private def isPlainDataFile(n: String): Boolean =
+    n.endsWith(".parquet") || n.endsWith(".parquet.crc") ||
+      n == "_SUCCESS" || n == "._SUCCESS.crc"
 
   /** Drop every session's cached plan for a retired snapshot dir. */
   private[sources] def evictPlans(dir: String): Unit =

@@ -1,12 +1,15 @@
 package graft.operators
 
 import java.nio.file.Files
+import java.util.concurrent.{CountDownLatch, TimeUnit}
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.SparkSpec
 import graft.core.{SideSpec, SyncSpec, Watermark}
-import graft.sources.ParquetTableIO
+import graft.sources.{ParquetTableIO, TableIO}
 
 /** End-to-end run-tick scenarios mirroring the reference's five
   * integration tests (tests/testSyncClass.py:111-268) on parquet
@@ -123,6 +126,137 @@ class SyncRunnerSpec extends SparkSpec {
       Seq(spec -> SyncRunner.Sides(l1, r1)), wm, nowMillis = now)
     reports.map(_.failed) shouldBe Seq(true)
     reports.head.error.get should include("not a watermark")
+  }
+
+  // ----- runAll: store-disjoint specs run concurrently
+
+  /** A store that runs hooks before delegating reads and prepares. */
+  private class Hooked(inner: TableIO, onRead: () => Unit = () => (),
+      onPrepare: () => Unit = () => ()) extends TableIO {
+    override def read(spark: SparkSession): DataFrame = { onRead(); inner.read(spark) }
+    override def exists: Boolean = inner.exists
+    override def prepare(df: DataFrame): TableIO.Prepared = { onPrepare(); inner.prepare(df) }
+  }
+
+  /** A rendezvous for `n` specs, each inside `prepare`: a serial run
+    * times out and fails the first spec instead of hanging.
+    */
+  private def rendezvous(n: Int): () => Unit = {
+    val latch = new CountDownLatch(n)
+    () => {
+      latch.countDown()
+      if (!latch.await(30, TimeUnit.SECONDS))
+        throw new IllegalStateException("sibling spec never reached prepare: specs ran serially")
+    }
+  }
+
+  private def named(name: String, left: String, right: String) = SyncSpec(name,
+    SideSpec(left, Some(left.toUpperCase)), SideSpec(right, Some(right.toUpperCase)),
+    filterDate = true, ignoreSameSource = true)
+
+  /** A fresh seeded watermark and store factory under one temp dir. */
+  private def multi(): (String, String => ParquetTableIO) = {
+    val d = Files.createTempDirectory("concurrent")
+    val wm = d.resolve("wm.log").toString
+    Watermark.write(wm, last)
+    (wm, t => new ParquetTableIO(d.resolve(t).toString))
+  }
+
+  test("components: specs sharing a table or a spec name group, in config order") {
+    val specs = Seq(named("a", "x", "y"), named("b", "p", "q"), named("c", "y", "z"),
+      named("b", "m", "n"), named("d", "k", "l"))
+    SyncRunner.components(specs, "wm") shouldBe Seq(Seq(0, 2), Seq(1, 3), Seq(4))
+  }
+
+  test("store-disjoint specs are inside prepare at the same time") {
+    val (wm, store) = multi()
+    val meet = rendezvous(2)
+    val specs = Seq(named("s1", "l1", "r1"), named("s2", "l2", "r2")).map { s =>
+      val (l, r) = (store(s.left.table), store(s.right.table))
+      l.overwrite(df(("a-" + s.name, inWin, "t", "L1"))); r.overwrite(df())
+      s -> SyncRunner.Sides(l, new Hooked(r, onPrepare = meet))
+    }
+    val reports = SyncRunner.runAll(spark, specs, wm, nowMillis = now)
+    reports.map(_.error) shouldBe Seq(None, None)
+    specs.foreach { case (s, sides) =>
+      sides.right.read(spark).select("id").as[String].collect() shouldBe Array("a-" + s.name)
+      Watermark.read(SyncRunner.specWmPath(wm, s.name)) shouldBe Some(Watermark.truncToMinute(now))
+    }
+  }
+
+  test("specs sharing a table run serially in config order; both merges land") {
+    val (wm, store) = multi()
+    val (x, y, z) = (store("x"), store("y"), store("z"))
+    x.overwrite(df(("a", inWin, "from-x", "X")))
+    y.overwrite(df())
+    z.overwrite(df(("c", inWin, "from-z", "Z")))
+    val log = mutable.ArrayBuffer[String]()
+    def hook(t: String, io: TableIO) =
+      new Hooked(io, onPrepare = () => log.synchronized(log += t))
+    val reports = SyncRunner.runAll(spark, Seq(
+      named("A", "x", "y") -> SyncRunner.Sides(hook("x", x), hook("y", y)),
+      named("B", "y", "z") -> SyncRunner.Sides(hook("y", y), hook("z", z))),
+      wm, nowMillis = now)
+    reports.map(_.error) shouldBe Seq(None, None)
+    log shouldBe Seq("y", "x", "z", "y") // A's two prepares, then B's
+    def ids(io: TableIO) = io.read(spark).select("id").as[String].collect().sorted.toSeq
+    ids(x) shouldBe Seq("a")
+    ids(y) shouldBe Seq("a", "c") // no lost update: both specs' merges into y landed
+    ids(z) shouldBe Seq("a", "c") // B saw A's write to y
+  }
+
+  test("a throwing spec leaves its concurrent sibling ok with its watermark advanced") {
+    val (wm, store) = multi()
+    val meet = rendezvous(2)
+    val (l, r) = (store("l1"), store("r1"))
+    l.overwrite(df(("a", inWin, "t", "L1"))); r.overwrite(df())
+    val (bl, br) = (store("l2"), store("r2"))
+    bl.overwrite(df(("b", inWin, "t", "L2"))); br.overwrite(df())
+    val boom = () => { meet(); throw new RuntimeException("boom") }
+    val reports = SyncRunner.runAll(spark, Seq(
+      named("broken", "l2", "r2") -> SyncRunner.Sides(bl, new Hooked(br, onPrepare = boom)),
+      named("healthy", "l1", "r1") -> SyncRunner.Sides(l, new Hooked(r, onPrepare = meet))),
+      wm, nowMillis = now)
+    reports.map(_.spec) shouldBe Seq("broken", "healthy")
+    reports.head.error.get should include("boom")
+    reports(1).error shouldBe None
+    r.read(spark).select("id").as[String].collect() shouldBe Array("a")
+    Watermark.read(SyncRunner.specWmPath(wm, "healthy")) shouldBe
+      Some(Watermark.truncToMinute(now))
+    Watermark.read(SyncRunner.specWmPath(wm, "broken")) shouldBe None
+    br.read(spark).count() shouldBe 0 // the failed spec published nothing
+  }
+
+  test("reports come back in config order, whatever order specs finish in") {
+    val (wm, store) = multi()
+    val lastDone = new CountDownLatch(1)
+    val specs = (0 until 3).map { i =>
+      val s = named(s"s$i", s"l$i", s"r$i")
+      val (l, r) = (store(s.left.table), store(s.right.table))
+      l.overwrite(df((s"k$i", inWin, "t", "L"))); r.overwrite(df())
+      // s0 cannot finish before s2 has reached its prepare
+      val hook: () => Unit =
+        if (i == 0) () => lastDone.await(30, TimeUnit.SECONDS)
+        else if (i == 2) () => lastDone.countDown()
+        else () => ()
+      s -> SyncRunner.Sides(l, new Hooked(r, onPrepare = hook))
+    }
+    val reports = SyncRunner.runAll(spark, specs, wm, nowMillis = now)
+    reports.map(_.spec) shouldBe Seq("s0", "s1", "s2")
+    reports.map(_.error) shouldBe Seq(None, None, None)
+  }
+
+  test("a single spec runs on the caller's thread") {
+    val (wm, store) = multi()
+    val (l, r) = (store("l"), store("r"))
+    l.overwrite(df(("a", inWin, "t", "L"))); r.overwrite(df())
+    val threads = mutable.Set[Thread]()
+    val seen: () => Unit = () => threads.synchronized(threads += Thread.currentThread)
+    val reports = SyncRunner.runAll(spark, Seq(named("one", "l", "r") ->
+      SyncRunner.Sides(new Hooked(l, seen, seen), new Hooked(r, seen, seen))),
+      wm, nowMillis = now)
+    reports.map(_.error) shouldBe Seq(None)
+    threads shouldBe Set(Thread.currentThread)
   }
 
   test("end-to-end tick over day-partitioned stores (pruning-ready layout)") {

@@ -152,6 +152,33 @@ class PlanShapeSpec extends SparkSpec {
     "Exchange hashpartitioning".r.findAllIn(p).length shouldBe 1
   }
 
+  test("LWW aggregate is a SortAggregate with partial_max_by before the exchange") {
+    // max_by's struct buffer cannot be hash-aggregated; the map-side
+    // combine survives as a partial SortAggregate below the shuffle
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{Final, Partial}
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.aggregate.SortAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val root = graft.SparkEntry.queries("a1_lww_latest_agg")(spark, dir)
+      .queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+    def maxBy(p: SparkPlan, mode: Any) = p match {
+      case a: SortAggregateExec => a.aggregateExpressions.exists(e =>
+        e.mode == mode && e.aggregateFunction.prettyName == "max_by")
+      case _ => false
+    }
+    val shuffles = root.collect {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[HashPartitioning] => e
+    }
+    shuffles should have size 1
+    shuffles.head.child.find(maxBy(_, Partial)) shouldBe defined
+    root.find(p => maxBy(p, Final) && p.find(_ eq shuffles.head).isDefined) shouldBe defined
+  }
+
   test("as-of join plans as union + window — no join operator at all") {
     val p = plan("q12_asof_join")
     p should include("Union")

@@ -207,4 +207,42 @@ class TableIOSpec extends SparkSpec {
       .anyMatch(k => k._2 == v1Dir) shouldBe false
     io.read(spark).select("v").as[String].collect() shouldBe Array("v3")
   }
+
+  test("a staged snapshot survives other writers' commits until it is published") {
+    val io = new ParquetTableIO(tmp)
+    io.overwrite(Seq((1, "base")).toDF("id", "v"))
+    val slow = io.prepare(Seq((1, "slow")).toDF("id", "v")) // stages v-2-<uid>
+    // three commits later, cleanup retires everything below v-3
+    (1 to 3).foreach(i => io.overwrite(Seq((1, s"fast-$i")).toDF("id", "v")))
+    slow.commit()
+    io.read(spark).select("v").as[String].collect() shouldBe Array("slow")
+  }
+
+  test("two threads committing to one store never fail a commit") {
+    // each thread stages, writes and publishes 50 snapshots; neither
+    // commit's cleanup may sweep the other's in-flight staging dir or
+    // pointer files
+    val path = tmp
+    new ParquetTableIO(path).overwrite(Seq(("base", 0)).toDF("w", "i"))
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val threads = Seq("A", "B").map { w =>
+      val t = new Thread(() =>
+        try (1 to 50).foreach(i => new ParquetTableIO(path).overwrite(Seq((w, i)).toDF("w", "i")))
+        catch { case e: Throwable => errors.add(e) })
+      t.start()
+      t
+    }
+    threads.foreach(_.join())
+    errors.toArray.toSeq shouldBe empty
+    val (w, i) = new ParquetTableIO(path).read(spark).as[(String, Int)].collect().toSeq match {
+      case Seq(row) => row
+      case rows => fail(s"expected one row, got $rows")
+    }
+    Seq("A", "B") should contain(w)
+    i should (be >= 1 and be <= 50)
+    // plain-file readers of the pointer still find the live snapshot name
+    val live = new ParquetTableIO(path).currentDir.get
+    Files.readString(java.nio.file.Paths.get(path, "_current")) shouldBe
+      java.nio.file.Paths.get(live).getFileName.toString
+  }
 }

@@ -9,7 +9,8 @@ import graft.sources.IncrementalDocArtifact.Piece
 
 /** Persisted MinHash band index for BATCH ingest screening — the
   * near-dup counterpart of `DigestStore` (exact dups) and the batch
-  * twin of `StreamingLshDedup`'s per-micro-batch index: an incoming
+  * twin of the per-micro-batch `graft.sources.DeltaIndex` that
+  * `StreamingLshDedup` keeps its bands in: an incoming
   * batch is banded once and equi-joined against the STORED (id, band,
   * bucket) table, so near-dup candidates per ingest cost O(batch ×
   * bucket occupancy) and the corpus text is never re-shingled.

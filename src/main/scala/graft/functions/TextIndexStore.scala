@@ -7,8 +7,8 @@ import graft.sources.IncrementalDocArtifact
 import graft.sources.IncrementalDocArtifact.Piece
 
 /** Persisted text-search index over a corpus directory, maintained
-  * INCREMENTALLY — the base+delta discipline `StreamingLshDedup`
-  * proved for the band index, applied to the postings/positional/stats
+  * INCREMENTALLY — the base+delta discipline `graft.sources.DeltaIndex`
+  * keeps for the streaming band index, applied to the postings/positional/stats
   * artifacts (what Elasticsearch's per-document indexing amortizes for
   * the reference, pyCassElastic.py:316-354: ES never re-derives its
   * inverted index from scratch on ingest, and neither does this store).

@@ -206,7 +206,7 @@ final class ParquetTableIO(val path: String, partitionBy: Seq[String] = Nil,
           else if (n.startsWith("v-") && versionOf(n) < s.prev &&
               !replaced.contains(n) && !keepVersionDir(n) &&
               !ParquetTableIO.inFlight.contains(ParquetTableIO.key(f))) {
-            deleteTree(f)
+            ParquetTableIO.deleteTree(f)
             ParquetTableIO.evictPlans(f.toString)
           }
           else if (s.prev >= 1 && ParquetTableIO.isPlainDataFile(n) &&
@@ -218,7 +218,7 @@ final class ParquetTableIO(val path: String, partitionBy: Seq[String] = Nil,
 
   private[graft] def abortStaged(s: Staged): Unit = {
     ParquetTableIO.inFlight.remove(ParquetTableIO.key(s.vDir))
-    deleteTree(s.vDir)
+    ParquetTableIO.deleteTree(s.vDir)
   }
 
   override def prepare(df: DataFrame): TableIO.Prepared = {
@@ -265,13 +265,6 @@ final class ParquetTableIO(val path: String, partitionBy: Seq[String] = Nil,
     overwrite(read(spark).coalesce(n))
     (files.size.toLong, parquetFiles(Paths.get(currentDir.get)).size.toLong)
   }
-
-  private def deleteTree(dir: Path): Unit =
-    if (Files.exists(dir)) {
-      val s = Files.walk(dir)
-      try s.sorted(Comparator.reverseOrder[Path]()).forEach(f => Files.delete(f))
-      finally s.close()
-    }
 }
 
 object ParquetTableIO {
@@ -302,6 +295,16 @@ object ParquetTableIO {
     */
   private def commitLock(root: Path): Object =
     commitLocks.computeIfAbsent(key(root), _ => new Object)
+
+  /** Recursively delete `dir` (children first); a missing dir is a
+    * no-op. The one tree delete every store's cleanup goes through.
+    */
+  private[graft] def deleteTree(dir: Path): Unit =
+    if (Files.exists(dir)) {
+      val s = Files.walk(dir)
+      try s.sorted(Comparator.reverseOrder[Path]()).forEach(f => Files.delete(f))
+      finally s.close()
+    }
 
   /** Data files of an adopted plain parquet layout (Spark's parquet
     * output: part files, commit marker, their checksums). The commit

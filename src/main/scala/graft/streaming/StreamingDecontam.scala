@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.dedup.Decontam
@@ -29,20 +29,8 @@ object StreamingDecontam {
   def start(docs: DataFrame, idCol: String,
       evalGrams: DataFrame, n: Int,
       outDir: String, checkpoint: String, trigger: Trigger): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          Decontam.reportAgainstGrams(batch, evalGrams, idCol,
-              TextFunctions.normalize(col("text")), n)
-            .withColumn("_batch", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch")
-            .parquet(outDir)
-        }
-        ()
-      }
-      .start()
+    BatchSink.start(docs, outDir, checkpoint, trigger) { batch =>
+      Decontam.reportAgainstGrams(batch, evalGrams, idCol,
+        TextFunctions.normalize(col("text")), n)
+    }
 }

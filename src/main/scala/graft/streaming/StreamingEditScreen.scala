@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.dedup.EditStore
@@ -22,20 +21,8 @@ object StreamingEditScreen {
       corpusPath: String, variant: String, corpusIdCol: String,
       corpusStrCol: Column, k: Int,
       outDir: String, checkpoint: String, trigger: Trigger): StreamingQuery =
-    strs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          EditStore.screen(batch.sparkSession, corpusPath, variant,
-              corpusIdCol, corpusStrCol, batch, idCol, strCol, k)
-            .withColumn("_batch", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch")
-            .parquet(outDir)
-        }
-        ()
-      }
-      .start()
+    BatchSink.start(strs, outDir, checkpoint, trigger) { batch =>
+      EditStore.screen(batch.sparkSession, corpusPath, variant,
+        corpusIdCol, corpusStrCol, batch, idCol, strCol, k)
+    }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.dedup.FullScreen
@@ -26,19 +25,7 @@ object StreamingFullScreen {
   def start(docs: DataFrame, idCol: String,
       sfDir: String, table: String,
       outDir: String, checkpoint: String, trigger: Trigger): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          FullScreen.screen(batch.sparkSession, sfDir, table, batch, idCol)
-            .withColumn("_batch", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch")
-            .parquet(outDir)
-        }
-        ()
-      }
-      .start()
+    BatchSink.start(docs, outDir, checkpoint, trigger) { batch =>
+      FullScreen.screen(batch.sparkSession, sfDir, table, batch, idCol)
+    }
 }

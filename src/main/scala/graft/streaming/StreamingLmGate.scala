@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.{coalesce, col, lit, when}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.functions.BigramLmStore
@@ -29,26 +29,14 @@ object StreamingLmGate {
   def start(docs: DataFrame, idCol: String,
       sfDir: String, table: String, threshold: Double,
       outDir: String, checkpoint: String, trigger: Trigger): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val scored = BigramLmStore.scoreBatch(batch.sparkSession, sfDir,
-            table, batch, idCol)
-          batch.select(col(idCol))
-            .join(scored, Seq(idCol), "left")
-            .withColumn("n_bigrams", coalesce(col("n_bigrams"), lit(0L)))
-            .withColumn("keep",
-              when(col("mean_logprob").isNotNull,
-                col("mean_logprob") >= threshold))
-            .withColumn("_batch", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch")
-            .parquet(outDir)
-        }
-        ()
-      }
-      .start()
+    BatchSink.start(docs, outDir, checkpoint, trigger) { batch =>
+      val scored = BigramLmStore.scoreBatch(batch.sparkSession, sfDir,
+        table, batch, idCol)
+      batch.select(col(idCol))
+        .join(scored, Seq(idCol), "left")
+        .withColumn("n_bigrams", coalesce(col("n_bigrams"), lit(0L)))
+        .withColumn("keep",
+          when(col("mean_logprob").isNotNull,
+            col("mean_logprob") >= threshold))
+    }
 }

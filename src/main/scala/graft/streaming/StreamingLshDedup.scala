@@ -1,15 +1,12 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path, Paths}
-import java.util.Comparator
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.dedup.MinHashLSH
 import graft.functions.TextFunctions
-import graft.sources.ParquetTableIO
+import graft.sources.DeltaIndex
 
 /** Streaming near-duplicate detection: every micro-batch of documents
   * is probed against the PERSISTED MinHash band index (d10's
@@ -18,83 +15,38 @@ import graft.sources.ParquetTableIO
   * to the index — so each document's text is shingled exactly once,
   * in the batch that carried it.
   *
-  * Index layout — base + delta, so PER-BATCH COST IS O(batch), never
-  * O(index):
-  *
-  *   indexDir/base/        versioned-pointer snapshot (ParquetTableIO)
-  *   indexDir/delta/_batch=<id>/   one immutable partition per batch
-  *
-  * A batch writes ONLY its own `_batch=<id>` delta partition (dynamic
-  * partition overwrite — a replayed batch replaces its own files, no
-  * other partition is touched). The probe join reads base ∪ delta,
-  * the only legitimate per-batch O(index) cost, and shuffles only the
-  * small (band, bucket) keys. Every `compactEvery` batches the delta
-  * partitions are folded into the base via the pointer commit
-  * (readers keep resolving the old snapshot until the atomic pointer
-  * swap) and the absorbed delta partitions are deleted — the
-  * lakehouse merge-on-read shape.
+  * The index is a [[DeltaIndex]] — base snapshot + one immutable
+  * `_batch=<id>` delta partition per batch — so PER-BATCH COST IS
+  * O(batch), never O(index). A batch writes ONLY its own delta
+  * partition; the probe join reads base ∪ live deltas, the only
+  * legitimate per-batch O(index) cost, and shuffles only the small
+  * (band, bucket) keys. Every `compactEvery` batches the deltas fold
+  * into the base via the pointer commit.
   *
   * Replay safety: a micro-batch retried after a crash re-derives the
   * identical (deterministic) bands; candidates and the batch's delta
   * partition are both written with dynamic partition overwrite, so a
   * retry replaces its own output instead of appending a second copy;
   * the probe join drops id_index == id_probe (a replayed batch probes
-  * an index that may already hold its own bands). A batch replayed
-  * AFTER a compaction absorbed it re-creates its delta partition next
-  * to the base copy — duplicate band rows are harmless (candidate
-  * pairs are distinct'd; the next compaction distincts the index) and
-  * never lose data.
+  * an index that may already hold its own bands). A fold publishes the
+  * cumulative list of batches it absorbed in the same pointer flip as
+  * the folded bands, so a batch replayed AFTER a fold (or a delta whose
+  * deletion crashed) re-creates a DEAD partition: reads skip it, band
+  * rows never count twice, and the next fold deletes it.
   */
 object StreamingLshDedup {
 
-  private def baseIO(indexDir: String) =
-    new ParquetTableIO(Paths.get(indexDir, "base").toString)
-  private def deltaDir(indexDir: String): Path = Paths.get(indexDir, "delta")
-
-  private def readIndexOpt(spark: SparkSession, indexDir: String): Option[DataFrame] = {
-    val base = baseIO(indexDir)
-    val delta = deltaDir(indexDir)
-    val parts = Seq(
-      if (base.exists) Some(base.read(spark)) else None,
-      if (Files.exists(delta) && {
-          // close the DirectoryStream — this runs once per micro-batch,
-          // an unclosed listing leaks one fd per batch until GC
-          val s = Files.list(delta)
-          try s.anyMatch(_.getFileName.toString.startsWith("_batch="))
-          finally s.close()
-        })
-        Some(spark.read.parquet(delta.toString).drop("_batch"))
-      else None).flatten
-    parts.reduceOption(_.unionByName(_))
-  }
-
   /** base ∪ delta view of the band index (doc id, band, bucket). */
   def readIndex(spark: SparkSession, indexDir: String): DataFrame =
-    readIndexOpt(spark, indexDir).getOrElse(
+    new DeltaIndex(indexDir).read(spark).getOrElse(
       throw new IllegalStateException(s"no band index at $indexDir"))
 
-  /** Fold all delta partitions into the base snapshot (one pointer
-    * commit, computed FROM the old base while readers still resolve
-    * it), then delete exactly the delta partitions that were read.
-    * Runs inside the micro-batch callback on the `compactEvery`
-    * cadence, or standalone as an offline hygiene pass.
+  /** Fold the live delta partitions into the base snapshot. Runs inside
+    * the micro-batch callback on the `compactEvery` cadence, or
+    * standalone as an offline hygiene pass.
     */
-  def compactIndex(spark: SparkSession, indexDir: String): Unit = {
-    val delta = deltaDir(indexDir)
-    if (!Files.exists(delta)) return
-    val absorbed = {
-      val s = Files.list(delta)
-      try s.filter(_.getFileName.toString.startsWith("_batch="))
-        .toArray.toSeq.map(_.asInstanceOf[Path])
-      finally s.close()
-    }
-    if (absorbed.isEmpty) return
-    val base = baseIO(indexDir)
-    val deltaDf = spark.read.parquet(delta.toString).drop("_batch")
-    val merged = if (base.exists) base.read(spark).unionByName(deltaDf) else deltaDf
-    base.overwrite(merged.distinct())
-    absorbed.foreach(deleteTree)
-  }
+  def compactIndex(spark: SparkSession, indexDir: String): Unit =
+    new DeltaIndex(indexDir).compact(spark)
 
   /** Start the pipeline on a streaming documents DataFrame.
     *
@@ -136,33 +88,16 @@ object StreamingLshDedup {
           // signatures computed ONCE per batch, reused for probe + append
           val bands = MinHashLSH.bandedIndex(spread, idCol, norm)
             .localCheckpoint(true)
+          val index = new DeltaIndex(indexDir)
           // cold start probes an empty index of the batch's own schema
-          val index = readIndexOpt(batch.sparkSession, indexDir)
-            .getOrElse(bands.limit(0))
-          MinHashLSH.probeCandidatesBanded(index, bands, idCol,
-              maxIndexPerBucket)
-            .withColumn("_batch", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch")
-            .parquet(candidatesDir)
+          BatchSink.write(MinHashLSH.probeCandidatesBanded(
+              index.read(batch.sparkSession).getOrElse(bands.limit(0)),
+              bands, idCol, maxIndexPerBucket),
+            batchId, candidatesDir)
           // O(batch) append: only this batch's partition is written
-          bands.withColumn("_batch", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch")
-            .parquet(deltaDir(indexDir).toString)
-          if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-            compactIndex(batch.sparkSession, indexDir)
+          index.append(bands, batchId, compactEvery)
         }
         ()
       }
       .start()
-
-  private def deleteTree(dir: Path): Unit =
-    if (Files.exists(dir)) {
-      val s = Files.walk(dir)
-      try s.sorted(Comparator.reverseOrder[Path]()).forEach(f => Files.delete(f))
-      finally s.close()
-    }
 }

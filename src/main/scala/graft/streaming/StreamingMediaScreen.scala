@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.multimodal.MediaScreen
@@ -24,24 +23,10 @@ import graft.multimodal.MediaScreen
 object StreamingMediaScreen {
 
   def start(media: DataFrame, sfDir: String, table: String,
-      outDir: String, checkpoint: String, trigger: Trigger): StreamingQuery = {
-    val spark = media.sparkSession
-    media.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          MediaScreen.screen(spark, sfDir, table, batch)
-            .withColumn("_batch", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch")
-            .parquet(outDir)
-        }
-        ()
-      }
-      .start()
-  }
+      outDir: String, checkpoint: String, trigger: Trigger): StreamingQuery =
+    BatchSink.start(media, outDir, checkpoint, trigger) { batch =>
+      MediaScreen.screen(media.sparkSession, sfDir, table, batch)
+    }
 
   /** The screen's report read back (all batches). */
   def report(spark: SparkSession, outDir: String): DataFrame =

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.dedup.PrefixStore
@@ -27,20 +26,8 @@ object StreamingPrefixScreen {
   def start(docs: DataFrame, idCol: String,
       sfDir: String, table: String, tauNum: Int, tauDen: Int,
       outDir: String, checkpoint: String, trigger: Trigger): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          PrefixStore.screen(batch.sparkSession, sfDir, table,
-              batch, idCol, tauNum, tauDen)
-            .withColumn("_batch", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch")
-            .parquet(outDir)
-        }
-        ()
-      }
-      .start()
+    BatchSink.start(docs, outDir, checkpoint, trigger) { batch =>
+      PrefixStore.screen(batch.sparkSession, sfDir, table,
+        batch, idCol, tauNum, tauDen)
+    }
 }

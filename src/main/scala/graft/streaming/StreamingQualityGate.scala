@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.functions.QualityClassifier
@@ -32,23 +32,11 @@ object StreamingQualityGate {
   def start(docs: DataFrame, idCol: String, model: LrModel,
       threshold: Double, labelCol: String, positive: String,
       outDir: String, checkpoint: String, trigger: Trigger): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val feat = QualityClassifier.features(
-            batch, idCol, col("text"), col(labelCol), positive)
-          QualityClassifier.score(feat, model)
-            .select(col(idCol), col("label"), col("score"),
-              (col("score") >= threshold).as("keep"))
-            .withColumn("_batch", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch")
-            .parquet(outDir)
-        }
-        ()
-      }
-      .start()
+    BatchSink.start(docs, outDir, checkpoint, trigger) { batch =>
+      val feat = QualityClassifier.features(
+        batch, idCol, col("text"), col(labelCol), positive)
+      QualityClassifier.score(feat, model)
+        .select(col(idCol), col("label"), col("score"),
+          (col("score") >= threshold).as("keep"))
+    }
 }

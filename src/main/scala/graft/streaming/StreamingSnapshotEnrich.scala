@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.sources.v2.GraftSnapshotDataSource
@@ -30,23 +29,11 @@ object StreamingSnapshotEnrich {
   def start(stream: DataFrame, keys: Seq[String], storePath: String,
       outDir: String, checkpoint: String, trigger: Trigger,
       version: Option[Long] = None): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val reader = batch.sparkSession.read
-            .format(GraftSnapshotDataSource.Name)
-          val dim = version.fold(reader)(v =>
-            reader.option("version", v)).load(storePath)
-          batch.join(dim, keys, "left")
-            .withColumn("_batch", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch")
-            .parquet(outDir)
-        }
-        ()
-      }
-      .start()
+    BatchSink.start(stream, outDir, checkpoint, trigger) { batch =>
+      val reader = batch.sparkSession.read
+        .format(GraftSnapshotDataSource.Name)
+      val dim = version.fold(reader)(v =>
+        reader.option("version", v)).load(storePath)
+      batch.join(dim, keys, "left")
+    }
 }

@@ -508,6 +508,71 @@ class StreamingSketchSpec extends SparkSpec {
   }
 }
 
+class BatchSinkSpec extends SparkSpec {
+  import spark.implicits._
+
+  private def batchDirs(dir: java.nio.file.Path): Set[String] =
+    if (!Files.exists(dir)) Set.empty
+    else {
+      val s = Files.list(dir)
+      try s.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
+        .map(_.getFileName.toString).filter(_.startsWith("_batch=")).toSet
+      finally s.close()
+    }
+
+  private def filesWithMtime(dir: java.nio.file.Path): Map[String, Long] = {
+    val s = Files.walk(dir)
+    try s.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(p => p.getFileName.toString.endsWith(".parquet"))
+      .map(p => p.toString -> Files.getLastModifiedTime(p).toMillis).toMap
+    finally s.close()
+  }
+
+  test("a micro-batch filtered to empty never calls the screen and writes no partition") {
+    implicit val sql = spark.sqlContext
+    val base = Files.createTempDirectory("bsink_empty")
+    val out = base.resolve("out")
+    val calls = new java.util.concurrent.atomic.AtomicInteger(0)
+
+    val mem = MemoryStream[(Long, String)]
+    val q = BatchSink.start(mem.toDF().toDF("id", "text").where(col("id") >= 100L),
+        out.toString, base.resolve("ckpt").toString,
+        Trigger.ProcessingTime("50 milliseconds")) { batch =>
+      calls.incrementAndGet()
+      batch
+    }
+    // batch 0 carries rows, but none survive the filter
+    mem.addData((1L, "dropped"), (2L, "dropped too"))
+    q.processAllAvailable()
+    calls.get shouldBe 0
+    batchDirs(out) shouldBe empty
+    // batch 1 is non-empty after the filter: screened once, lands once
+    mem.addData((100L, "kept"))
+    q.processAllAvailable()
+    q.stop()
+    calls.get shouldBe 1
+    batchDirs(out) shouldBe Set("_batch=1")
+    spark.read.parquet(out.toString).select("id").as[Long].collect() shouldBe Array(100L)
+  }
+
+  test("rewriting a batch id replaces only that partition, leaving others byte-for-byte") {
+    val base = Files.createTempDirectory("bsink_replay")
+    val out = base.resolve("out")
+    BatchSink.write(Seq((1L, "a"), (2L, "b")).toDF("id", "text"), 0L, out.toString)
+    BatchSink.write(Seq((3L, "c")).toDF("id", "text"), 1L, out.toString)
+    val other = filesWithMtime(out.resolve("_batch=1"))
+    other should not be empty
+
+    // a replay of batch 0 (here with different content, to tell the
+    // copies apart) replaces its own partition and nothing else
+    BatchSink.write(Seq((4L, "d")).toDF("id", "text"), 0L, out.toString)
+    batchDirs(out) shouldBe Set("_batch=0", "_batch=1")
+    spark.read.parquet(out.toString).select("id", "_batch").as[(Long, Long)]
+      .collect().toSet shouldBe Set((4L, 0L), (3L, 1L))
+    filesWithMtime(out.resolve("_batch=1")) shouldBe other
+  }
+}
+
 class StreamingLshDedupSpec extends SparkSpec {
   import spark.implicits._
 
@@ -558,6 +623,19 @@ class StreamingLshDedupSpec extends SparkSpec {
     remaining shouldBe 0L
     StreamingLshDedup.readIndex(spark, indexDir)
       .select("doc_id").distinct().count() shouldBe 4
+
+    // crash-atomicity: a batch replayed (or whose deletion crashed)
+    // AFTER compaction recreates an absorbed partition — it is dead
+    // by the folded-batches marker, so band rows never count twice
+    val folded = StreamingLshDedup.readIndex(spark, indexDir).count()
+    val dead = delta.resolve("_batch=0")
+    StreamingLshDedup.readIndex(spark, indexDir).limit(2)
+      .write.mode("overwrite").parquet(dead.toString)
+    StreamingLshDedup.readIndex(spark, indexDir).count() shouldBe folded
+    // next compaction garbage-collects the dead directory
+    StreamingLshDedup.compactIndex(spark, indexDir)
+    Files.exists(dead) shouldBe false
+    StreamingLshDedup.readIndex(spark, indexDir).count() shouldBe folded
   }
 
   test("per-batch index write cost is independent of index size") {
